@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The composed training-data pipeline: extract → quality gate → near-dup
@@ -56,12 +56,11 @@ object CuratedPipeline {
     def cp(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
 
-    val done = ExtractPipeline.committedBuckets(outDir)
-    val remaining = (0 until numBuckets).filterNot(done)
+    val done = Commit.committedBuckets(outDir)
     // resume no-op — EXCEPT when the caller wants the index and a prior run
     // was killed between its last bucket commit and the index write: then
     // labels recompute (deterministic) and the index still gets committed
-    if (remaining.isEmpty && (!persistIndex || indexState(outDir)._1 >= 1L))
+    if ((0 until numBuckets).forall(done) && (!persistIndex || indexState(outDir)._1 >= 1L))
       return Seq.empty
 
     // band keys computed ONCE and shared between the components pass and
@@ -95,57 +94,15 @@ object CuratedPipeline {
       .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
       .withColumn("warc_day", to_date(col("warc_ts")))
 
-    val groups = remaining.grouped(
-      math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)).toSeq
-    val allLineage = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
-
-    groups.zipWithIndex.foreach { case (buckets, gi) =>
-      val snapshotId = f"snap-$runId-$gi%03d"
-      val acc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$snapshotId")
-      val slice = kept.filter(col("part_bucket").isin(buckets.map(Integer.valueOf): _*))
-        // co-locate each bucket in one task (one output file per bucket)
-        .repartition(buckets.length, col("part_bucket"))
-
+    val lineage = Commit.commitSnapshots(kept, outDir, numBuckets, snapshotGroups, runId,
+        "curate_inc", "part_bucket", "warc_day") { (slice, report) =>
       val textIdx = slice.schema.fieldIndex(textCol)
-      val counted: Dataset[Row] = slice.mapPartitions { it =>
-        val t0 = System.nanoTime()
-        var rows = 0L; var bytes = 0L
-        var reported = false
-        val out = it.map { r =>
-          rows += 1
-          val t = if (r.isNullAt(textIdx)) null else r.getString(textIdx)
-          bytes += (if (t == null) 0 else t.length)
+      slice.mapPartitions(it => report { t =>
+        it.map { r =>
+          t.add(success = true, if (r.isNullAt(textIdx)) 0 else r.getString(textIdx).length)
           r
         }
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h && !reported) {
-              reported = true
-              acc.add(LineageRow(runId, snapshotId,
-                org.apache.spark.TaskContext.getPartitionId(), rows, rows, 0L,
-                bytes, (System.nanoTime() - t0) / 1000000, "committed"))
-            }
-            h
-          }
-          def next(): Row = out.next()
-        }
-      }(Encoders.row(slice.schema))
-
-      counted.write.mode(SaveMode.Overwrite)
-        .partitionBy("curate_inc", "part_bucket", "warc_day")
-        // scoped dynamic overwrite: a torn group's rewrite replaces exactly
-        // its buckets (same protocol as ExtractPipeline)
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
-
-      import scala.jdk.CollectionConverters._
-      val lineage = acc.value.asScala.toSeq
-        .groupBy(_.partition_id).map(_._2.head).toSeq.sortBy(_.partition_id)
-      ExtractPipeline.appendManifest(outDir, runId, snapshotId, buckets, lineage)
-      allLineage ++= lineage
+      })(Encoders.row(slice.schema))
     }
     // index commits LAST — after every kept bucket. The ordering matters
     // for the continuous path: curateBatch dispatches on indexState, so a
@@ -156,7 +113,7 @@ object CuratedPipeline {
     // (deterministic) and lands here again.
     if (persistIndex)
       writeIndex(spark, outDir, keyed.get, labelsRaw, increment = 0L, labelsVersion = 1L)
-    allLineage.toSeq
+    lineage
   }
 
   // ---- the persisted dedup index + incremental curation ------------------
@@ -203,20 +160,13 @@ object CuratedPipeline {
   private def indexBandsDir(outDir: String) = s"$outDir/index/bands"
   private def indexLabelsDir(outDir: String, v: Long) = s"$outDir/index/labels/v$v"
 
+  private def indexManifest(outDir: String) = Commit.manifest(outDir, "index_manifest")
+
   /** (current labels version, committed increment ids); (0, ∅) = no index. */
   def indexState(outDir: String): (Long, Set[Long]) = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "index_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return (0L, Set.empty)
-    var version = 0L
-    val incs = scala.collection.mutable.Set.empty[Long]
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"labels_version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val im = java.util.regex.Pattern.compile("\"increment\":(\\d+)").matcher(line)
-      if (im.find()) incs += im.group(1).toLong
-    }
-    (version, incs.toSet)
+    val mf = indexManifest(outDir)
+    (Commit.lines(mf).flatMap(Commit.long(_, "labels_version")).maxOption.getOrElse(0L),
+      Commit.ids(mf, "increment"))
   }
 
   private def writeIndex(spark: SparkSession, outDir: String,
@@ -228,11 +178,8 @@ object CuratedPipeline {
       .parquet(indexBandsDir(outDir))
     labels.select(col("id"), col("comp")).write.mode(SaveMode.Overwrite)
       .parquet(indexLabelsDir(outDir, labelsVersion))
-    val dir = java.nio.file.Paths.get(outDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    val line = s"""{"increment":$increment,"labels_version":$labelsVersion}""" + "\n"
-    java.nio.file.Files.write(dir.resolve("index_manifest.jsonl"), line.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.append(indexManifest(outDir),
+      Commit.json("increment" -> increment, "labels_version" -> labelsVersion))
   }
 
   /** Read the current (id, comp) labels table — the committed materialized
@@ -397,12 +344,7 @@ object CuratedPipeline {
       // checkpoint so the post-write lineage counts reuse the computed
       // batch instead of re-deriving labels
       val appended = cp(keptNew.repartition(newBuckets.length, col("part_bucket")))
-      appended.write.mode(SaveMode.Overwrite)
-        .partitionBy("curate_inc", "part_bucket", "warc_day")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
+      Commit.write(appended, s"$outDir/data", "curate_inc", "part_bucket", "warc_day")
       val ms = (System.nanoTime() - t0) / 1000000
       val counts: Map[Int, (Long, Long)] = appended.groupBy(col("part_bucket"))
         .agg(count(lit(1)).as("n"), sum(length(col(textCol)).cast("long")).as("bytes"))
@@ -428,8 +370,7 @@ object CuratedPipeline {
     writeIndex(spark, outDir, newKeys, labelsNext, increment = inc,
       labelsVersion = curVersion + 1)
     if (newBuckets.nonEmpty)
-      ExtractPipeline.appendManifest(outDir, runId, s"snap-$runId-inc",
-        newBuckets, lineage.toSeq)
+      Commit.appendSnapshot(outDir, runId, s"snap-$runId-inc", newBuckets, lineage.toSeq)
     lineage.toSeq
   }
 
@@ -451,17 +392,8 @@ object CuratedPipeline {
       extractDir: String, curatedDir: String,
       numBuckets: Int = 32, minTextLength: Int = 1,
       honorNoindex: Boolean = true, clusterByCanonical: Boolean = true): Seq[LineageRow] = {
-    val mf = java.nio.file.Paths.get(curatedDir, "_manifest", "curated_batches.jsonl")
-    val doneBatches: Set[Long] =
-      if (!java.nio.file.Files.exists(mf)) Set.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(mf).asScala.flatMap { line =>
-          val m = java.util.regex.Pattern.compile("\"batch_id\":(\\d+)").matcher(line)
-          if (m.find()) Some(m.group(1).toLong) else None
-        }.toSet
-      }
-    if (doneBatches.contains(batchId)) return Seq.empty
+    val mf = Commit.manifest(curatedDir, "curated_batches")
+    if (Commit.ids(mf, "batch_id").contains(batchId)) return Seq.empty
 
     val gated = StreamingIngest.readCommitted(spark, extractDir)
       .filter(col("ingest_batch") === batchId)
@@ -495,11 +427,7 @@ object CuratedPipeline {
           canonicalCol = canonical)
       }
 
-    val dir = java.nio.file.Paths.get(curatedDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("curated_batches.jsonl"),
-      (s"""{"batch_id":$batchId}""" + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.append(mf, Commit.json("batch_id" -> batchId))
     lineage
   }
 
@@ -686,23 +614,11 @@ object CuratedPipeline {
         .withColumn("increment", col("increment").cast("long"))
   }
 
-  private final case class KeptCompactState(version: Long, folded: Set[Long])
+  private def keptCompactManifest(outDir: String) =
+    Commit.manifest(outDir, "kept_compact_manifest")
 
-  private def keptCompactState(outDir: String): KeptCompactState = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "kept_compact_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return KeptCompactState(0L, Set.empty)
-    var version = 0L
-    val folded = scala.collection.mutable.Set.empty[Long]
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val im = java.util.regex.Pattern.compile("\"incs\":\\[([0-9,]*)\\]").matcher(line)
-      if (im.find() && im.group(1).nonEmpty)
-        folded ++= im.group(1).split(",").map(_.toLong)
-    }
-    KeptCompactState(version, folded.toSet)
-  }
+  private def keptCompactState(outDir: String): Commit.Folds =
+    Commit.readFolds(keptCompactManifest(outDir), "incs")
 
   /** Raw committed kept rows, deletes NOT applied: current compact version
     * ∪ increment prefixes committed after the fold. Every row visible
@@ -787,17 +703,8 @@ object CuratedPipeline {
       .getOrElse(newRows)
       .repartition(numBuckets, col("part_bucket"))
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite)
-      .partitionBy("part_bucket", "warc_day")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(compactDataDir(outDir, next))
-    val dir = java.nio.file.Paths.get(outDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    val line = s"""{"version":$next,"incs":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""" + "\n"
-    java.nio.file.Files.write(dir.resolve("kept_compact_manifest.jsonl"),
-      line.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.parquet(union, "part_bucket", "warc_day").parquet(compactDataDir(outDir, next))
+    Commit.appendFold(keptCompactManifest(outDir), "incs", Commit.Folds(next, st.folded ++ todo))
     next
   }
 
@@ -825,17 +732,9 @@ object CuratedPipeline {
     * curated table's snapshot history. One snapshot per increment; the
     * base build is increment 0.
     */
-  def keptSnapshots(outDir: String): Seq[(Long, Long)] = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "index_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.toSeq.flatMap { line =>
-      val im = java.util.regex.Pattern.compile("\"increment\":(\\d+)").matcher(line)
-      val vm = java.util.regex.Pattern.compile("\"labels_version\":(\\d+)").matcher(line)
-      if (im.find() && vm.find()) Some((im.group(1).toLong, vm.group(1).toLong))
-      else None
-    }
-  }
+  def keptSnapshots(outDir: String): Seq[(Long, Long)] =
+    Commit.lines(indexManifest(outDir)).flatMap(l =>
+      for (i <- Commit.long(l, "increment"); v <- Commit.long(l, "labels_version")) yield (i, v))
 
   /** Time travel on the kept corpus: exactly what [[readKept]] returned
     * when increment `asOf` was the head — rows appended at increments

@@ -111,7 +111,9 @@ object Dedup {
 
   /** Symmetric star edges over a (id, band) key table: every id links to
     * its bucket's min-id hub — O(k) edges per bucket instead of the O(k²)
-    * clique, with identical reachability.
+    * clique, with identical reachability. The output is a bag, not a set:
+    * it may contain duplicate edge rows (an id sharing its hub through
+    * more than one band), which [[connectedComponents]] tolerates.
     */
   def starEdges(keyed: DataFrame): DataFrame = {
     val hubs = keyed.groupBy(col("band")).agg(min(col("id")).as("hub"))

@@ -1,21 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
-
-/** Per-partition lineage row (SURVEY.md §7.5 / FIXTURES.md §3). */
-final case class LineageRow(
-    run_id: String,
-    snapshot_id: String,
-    partition_id: Int,
-    input_rows: Long,
-    ok_rows: Long,
-    fail_rows: Long,
-    bytes_in: Long,
-    ms: Long,
-    status: String)
 
 /** The resumable extraction job: Iceberg-snapshot semantics emulated over
   * partitioned Parquet + an append-only JSONL manifest (no Iceberg jar in
@@ -30,12 +16,9 @@ final case class LineageRow(
   *   out/_manifest/manifest.jsonl        — one line per committed snapshot,
   *                                         listing bucket ids + lineage
   *
-  * Commit protocol: buckets are processed in snapshot groups; each group's
-  * parquet append completes BEFORE its manifest line is written, so a kill
-  * between the two at worst reprocesses one group (append of the same
-  * deterministic rows into a bucket it then overwrites is avoided by
-  * re-writing the whole group with dynamic partition overwrite). Resume
-  * reads the manifest and anti-joins committed buckets (J3).
+  * Commit protocol: [[Commit.commitSnapshots]] — buckets are processed in
+  * snapshot groups, each group's write completes BEFORE its manifest line,
+  * and resume skips committed buckets (J3).
   */
 object ExtractPipeline {
 
@@ -44,61 +27,23 @@ object ExtractPipeline {
       url: String, warc_ts: java.sql.Timestamp, html: Array[Byte],
       text: String, lang: String, part_bucket: Int)
 
-  def committedBuckets(outDir: String): Set[Int] = {
-    val mf = Paths.get(outDir, "_manifest", "manifest.jsonl")
-    if (!Files.exists(mf)) Set.empty
-    else Files.readAllLines(mf).asScala.flatMap { line =>
-      // minimal parse: "buckets":[1,2,3]
-      val m = java.util.regex.Pattern.compile("\"buckets\":\\[([0-9,]*)\\]").matcher(line)
-      if (m.find() && m.group(1).nonEmpty) m.group(1).split(",").map(_.toInt).toSeq else Seq.empty
-    }.toSet
-  }
-
-  private[pipeline] def appendManifest(outDir: String, runId: String, snapshotId: String,
-      buckets: Seq[Int], lineage: Seq[LineageRow]): Unit = {
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val lineageJson = lineage.map(l =>
-      s"""{"partition_id":${l.partition_id},"input_rows":${l.input_rows},"ok_rows":${l.ok_rows},"fail_rows":${l.fail_rows},"bytes_in":${l.bytes_in},"ms":${l.ms},"status":"${l.status}"}""")
-      .mkString("[", ",", "]")
-    val line = s"""{"run_id":"$runId","snapshot_id":"$snapshotId","buckets":[${buckets.mkString(",")}],"lineage":$lineageJson}""" + "\n"
-    Files.write(dir.resolve("manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  /** Buckets committed by any snapshot. */
+  def committedBuckets(outDir: String): Set[Int] = Commit.committedBuckets(outDir)
 
   /** Snapshot-compact the manifest: fold every per-snapshot line into ONE
-    * line carrying the full committed-bucket set (the extract-table analog
-    * of StreamingIngest's compaction — without it the manifest grows one
-    * line per snapshot forever and `committedBuckets` re-parses all of
-    * history on every resume). Per-snapshot lineage lines are moved to
-    * `manifest_archive.jsonl` (append-only, nothing is lost — the same
+    * line carrying the full committed-bucket set (without it the manifest
+    * grows one line per snapshot forever and `committedBuckets` re-parses
+    * all of history on every resume). Per-snapshot lineage lines are moved
+    * to `manifest_archive.jsonl` (append-only, nothing is lost — the same
     * trade as Iceberg's expire_snapshots: current state stays one read,
-    * history moves to the archive). The rewrite goes through a temp file +
-    * atomic move, so a reader/crash mid-compaction sees either the old or
-    * the new manifest, never a torn one. Single maintenance writer
-    * assumed (like every compaction here): a snapshot APPENDED between
-    * this function's read and its move would be lost — do not run it
-    * concurrently with an active extract job on the same table.
+    * history moves to the archive), and the rewrite is atomic
+    * ([[Commit.replace]]). Do not run it concurrently with an active
+    * extract job on the same table: a snapshot appended between its read
+    * and its move would be lost.
     *
     * @return number of manifest lines folded (0 = nothing to do)
     */
-  def compactManifest(outDir: String): Int = {
-    val dir = Paths.get(outDir, "_manifest")
-    val mf = dir.resolve("manifest.jsonl")
-    if (!Files.exists(mf)) return 0
-    val lines = Files.readAllLines(mf).asScala.filter(_.nonEmpty)
-    if (lines.size <= 1) return 0
-    val buckets = committedBuckets(outDir).toSeq.sorted
-    val archive = dir.resolve("manifest_archive.jsonl")
-    Files.write(archive, (lines.mkString("\n") + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    val line = s"""{"run_id":"manifest-compact","snapshot_id":"compact","buckets":[${buckets.mkString(",")}],"lineage":[]}""" + "\n"
-    val tmp = dir.resolve("manifest.jsonl.tmp")
-    Files.write(tmp, line.getBytes("UTF-8"))
-    Files.move(tmp, mf, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    lines.size
-  }
+  def compactManifest(outDir: String): Int = Commit.compactSnapshots(outDir)
 
   /** Run (or resume) the extraction job.
     *
@@ -113,80 +58,21 @@ object ExtractPipeline {
       numBuckets: Int = 32, snapshotGroups: Int = 4,
       runId: String = "run"): Seq[LineageRow] = {
     import spark.implicits._
-
-    val done = committedBuckets(outDir)
-    val remaining = (0 until numBuckets).filterNot(done)
-    if (remaining.isEmpty) return Seq.empty
-
     val bucketed = pages
       .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-
-    val groups = remaining.grouped(math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)).toSeq
-    val allLineage = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
-
-    groups.zipWithIndex.foreach { case (buckets, gi) =>
-      val snapshotId = f"snap-$runId-$gi%03d"
-      val metricsAcc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$snapshotId")
-      val slice = bucketed.filter(col("part_bucket").isin(buckets.map(Integer.valueOf): _*))
-        // co-locate each bucket in one task: the shuffle key IS the hidden
-        // partition, so the parquet writer emits one file per bucket instead
-        // of numTasks×numBuckets fragments
-        .repartition(buckets.length, col("part_bucket"))
-
-      val extracted = slice.as[BucketedPage]
-        .mapPartitions { it =>
-          val t0 = System.nanoTime()
-          var inRows = 0L; var ok = 0L; var fail = 0L; var bytes = 0L
-          var reported = false
-          val out = it.map { bp =>
+    Commit.commitSnapshots(bucketed, outDir, numBuckets, snapshotGroups, runId,
+        "part_bucket", "warc_day") { (slice, report) =>
+      slice.as[BucketedPage]
+        .mapPartitions(it => report { t =>
+          it.map { bp =>
             val ep = ExtractStage.processOne(Page(bp.url, bp.warc_ts, bp.html, bp.text, bp.lang))
-            inRows += 1
-            if (ep.success) ok += 1 else fail += 1
-            bytes += (if (bp.html == null) 0 else bp.html.length)
+            t.add(ep.success, if (bp.html == null) 0 else bp.html.length)
             ep
           }
-          new Iterator[ExtractedPage] {
-            def hasNext: Boolean = {
-              val h = out.hasNext
-              if (!h && !reported) {
-                reported = true
-                metricsAcc.add(LineageRow(runId, snapshotId,
-                  org.apache.spark.TaskContext.getPartitionId(), inRows, ok, fail,
-                  bytes, (System.nanoTime() - t0) / 1000000, "committed"))
-              }
-              h
-            }
-            def next(): ExtractedPage = out.next()
-          }
-        }
-
-      extracted
+        })
         .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
         .withColumn("warc_day", to_date(col("warc_ts")))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("part_bucket", "warc_day")
-        // dynamic partition overwrite: re-running a torn group replaces
-        // exactly its buckets, never clobbering committed ones. Scoped to
-        // THIS write (not the session conf) so callers' later partitioned
-        // writes keep whatever overwrite semantics they expect.
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd") // text-heavy output: zstd ≫ snappy at scale
-        // 16 MB row groups: the default 128 MB makes every write task hold
-        // a huge column buffer — on faulting-sensitive hosts that's a 2-3x
-        // throughput hit (BENCH.md), and smaller groups parallelize reads
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
-
-      // dedupe by partition id: a retried or speculative task reaches the
-      // end-of-iterator report twice with identical (deterministic)
-      // counts — keep one row per partition so the manifest audit trail
-      // never overcounts
-      val lineage = metricsAcc.value.asScala.toSeq
-        .groupBy(_.partition_id).map(_._2.head).toSeq.sortBy(_.partition_id)
-      appendManifest(outDir, runId, snapshotId, buckets, lineage)
-      allLineage ++= lineage
     }
-    allLineage.toSeq
   }
 
   /** Read the committed output table. */
@@ -199,30 +85,8 @@ object ExtractPipeline {
     * from the append-only archive, so history depth is never lost, only
     * moved off the hot resume path.
     */
-  def snapshotHistory(outDir: String): Seq[(String, Set[Int])] = {
-    def parse(path: java.nio.file.Path): Seq[(String, Set[Int])] =
-      if (!Files.exists(path)) Seq.empty
-      else Files.readAllLines(path).asScala.toSeq.filter(_.nonEmpty).flatMap { line =>
-        val sm = java.util.regex.Pattern.compile("\"snapshot_id\":\"([^\"]*)\"").matcher(line)
-        val bm = java.util.regex.Pattern.compile("\"buckets\":\\[([0-9,]*)\\]").matcher(line)
-        if (sm.find() && bm.find())
-          Some((sm.group(1),
-            if (bm.group(1).isEmpty) Set.empty[Int]
-            else bm.group(1).split(",").map(_.toInt).toSet))
-        else None
-      }
-    val dir = Paths.get(outDir, "_manifest")
-    // the "compact" marker is filtered from BOTH sources: a second
-    // compaction archives the first compaction's marker line, which must
-    // not surface as a phantom snapshot in the history
-    val all = (parse(dir.resolve("manifest_archive.jsonl")) ++
-      parse(dir.resolve("manifest.jsonl"))).filterNot(_._1 == "compact")
-    // archive + live manifest can briefly overlap right after compaction;
-    // keep first occurrence, preserving commit order
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, Set[Int]]
-    all.foreach { case (id, b) => if (!seen.contains(id)) seen(id) = b }
-    seen.toSeq
-  }
+  def snapshotHistory(outDir: String): Seq[(String, Set[Int])] =
+    Commit.snapshotHistory(outDir)
 
   /** Time travel: the table AS OF a committed snapshot — only buckets
     * committed at or before `snapshotId` are read (the `part_bucket`

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** Inverted-index retrieval over the corpus — the lexical complement of
   * the embedding ANN path (q34/q35/q48): build term postings once, then
@@ -116,21 +116,14 @@ object InvertedIndex {
   final case class IndexGen(gen: Long, nDocs: Long, totalDl: Long)
 
   /** Committed generation metadata, in commit order. */
-  def committedMeta(idxDir: String): Seq[IndexGen] = {
-    val mf = manifest(idxDir)
-    if (!Files.exists(mf)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val p = java.util.regex.Pattern.compile(
-        "\"gen\":(\\d+).*\"n_docs\":(\\d+).*\"total_dl\":(\\d+)")
-      Files.readAllLines(mf).asScala.toSeq.flatMap { line =>
-        val m = p.matcher(line)
-        if (m.find()) Some(IndexGen(m.group(1).toLong, m.group(2).toLong,
-          m.group(3).toLong))
-        else None
-      }.distinctBy(_.gen)
-    }
-  }
+  def committedMeta(idxDir: String): Seq[IndexGen] =
+    Commit.lines(manifest(idxDir)).flatMap { l =>
+      for (g <- Commit.long(l, "gen"); n <- Commit.long(l, "n_docs");
+           dl <- Commit.long(l, "total_dl")) yield IndexGen(g, n, dl)
+    }.distinctBy(_.gen)
+
+  private def metaLine(m: IndexGen) =
+    Commit.json("gen" -> m.gen, "n_docs" -> m.nDocs, "total_dl" -> m.totalDl)
 
   /** Committed generation numbers, in commit order. */
   def committedGens(idxDir: String): Seq[Long] = committedMeta(idxDir).map(_.gen)
@@ -159,11 +152,8 @@ object InvertedIndex {
       .write.mode("overwrite").parquet(s"$idxDir/l$g")
     val st = spark.read.parquet(s"$idxDir/l$g")
       .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long")).head()
-    val (nDocs, totalDl) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-    Files.createDirectories(Paths.get(idxDir))
-    Files.write(manifest(idxDir),
-      (s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}""" + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.append(manifest(idxDir),
+      metaLine(IndexGen(g, st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))))
     g
   }
 
@@ -227,12 +217,8 @@ object InvertedIndex {
       .write.mode("overwrite").parquet(s"$idxDir/l$g")
     // stats are additive under the disjoint-append contract — the fold's
     // manifest line is pure arithmetic, no recount
-    val (nDocs, totalDl) = (meta.map(_.nDocs).sum, meta.map(_.totalDl).sum)
-    val tmp = Paths.get(idxDir, s".index_manifest.tmp$g")
-    Files.write(tmp,
-      (s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}""" + "\n").getBytes("UTF-8"))
-    Files.move(tmp, manifest(idxDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Commit.replace(manifest(idxDir),
+      metaLine(IndexGen(g, meta.map(_.nDocs).sum, meta.map(_.totalDl).sum)))
     vacuum(spark, idxDir)
   }
 

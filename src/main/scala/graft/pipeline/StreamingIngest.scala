@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Continuous ingestion into the committed extract table: a Structured
@@ -32,22 +32,10 @@ import scala.jdk.CollectionConverters._
   */
 object StreamingIngest {
 
-  def committedBatches(outDir: String): Set[Long] = {
-    val mf = Paths.get(outDir, "_manifest", "stream_manifest.jsonl")
-    if (!Files.exists(mf)) Set.empty
-    else Files.readAllLines(mf).asScala.flatMap { line =>
-      val m = java.util.regex.Pattern.compile("\"batch_id\":(\\d+)").matcher(line)
-      if (m.find()) Some(m.group(1).toLong) else None
-    }.toSet
-  }
+  private def batchManifest(outDir: String) = Commit.manifest(outDir, "stream_manifest")
+  private def compactManifest(outDir: String) = Commit.manifest(outDir, "compact_manifest")
 
-  private def appendManifest(outDir: String, batchId: Long, rows: Long, ok: Long): Unit = {
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val line = s"""{"batch_id":$batchId,"rows":$rows,"ok_rows":$ok}""" + "\n"
-    Files.write(dir.resolve("stream_manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  def committedBatches(outDir: String): Set[Long] = Commit.ids(batchManifest(outDir), "batch_id")
 
   /** The `foreachBatch` function: extract + commit one micro-batch.
     * Public and directly callable so tests (and a replay after restart)
@@ -62,19 +50,14 @@ object StreamingIngest {
       .withColumn("ingest_batch", lit(batchId))
       .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
       .withColumn("warc_day", to_date(col("warc_ts")))
-    extracted.write.mode(SaveMode.Overwrite)
-      .partitionBy("ingest_batch", "part_bucket", "warc_day")
-      // dynamic overwrite scoped to THIS batch's partitions: replay rewrites
-      // ingest_batch=<id>/... in place, exactly-once by construction
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(s"$outDir/data")
+    // dynamic overwrite scoped to THIS batch's partitions: replay rewrites
+    // ingest_batch=<id>/... in place, exactly-once by construction
+    Commit.write(extracted, s"$outDir/data", "ingest_batch", "part_bucket", "warc_day")
     val stats = spark.read.parquet(s"$outDir/data")
       .filter(col("ingest_batch") === batchId)
       .agg(count(lit(1)), sum(when(col("success"), 1L).otherwise(0L))).head()
-    appendManifest(outDir, batchId, stats.getLong(0),
-      if (stats.isNullAt(1)) 0L else stats.getLong(1))
+    Commit.append(batchManifest(outDir), Commit.json("batch_id" -> batchId,
+      "rows" -> stats.getLong(0), "ok_rows" -> (if (stats.isNullAt(1)) 0L else stats.getLong(1))))
   }
 
   /** Wire a pages stream into the committed table. Caller starts/stops the
@@ -155,24 +138,8 @@ object StreamingIngest {
   // rewrites the same deterministic version directory. Single maintenance
   // writer assumed (as with Iceberg's rewrite_data_files).
 
-  private final case class CompactState(version: Long, folded: Set[Long])
-
-  private def compactState(outDir: String): CompactState = {
-    val mf = Paths.get(outDir, "_manifest", "compact_manifest.jsonl")
-    if (!Files.exists(mf)) return CompactState(0L, Set.empty)
-    val lines = Files.readAllLines(mf).asScala
-    if (lines.isEmpty) return CompactState(0L, Set.empty)
-    var version = 0L
-    val folded = scala.collection.mutable.Set.empty[Long]
-    lines.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val bm = java.util.regex.Pattern.compile("\"batches\":\\[([0-9,]*)\\]").matcher(line)
-      if (bm.find() && bm.group(1).nonEmpty)
-        folded ++= bm.group(1).split(",").map(_.toLong)
-    }
-    CompactState(version, folded.toSet)
-  }
+  private def compactState(outDir: String): Commit.Folds =
+    Commit.readFolds(compactManifest(outDir), "batches")
 
   /** Fold all committed-but-unfolded batches into the next compact version.
     * Returns the new version, or the current one if nothing to fold.
@@ -197,16 +164,8 @@ object StreamingIngest {
       .dropDuplicates("ingest_batch", "url")
       .repartition(numBuckets, col("part_bucket")) // ≈1 file per bucket dir
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite)
-      .partitionBy("part_bucket", "warc_day")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(s"$outDir/compact/v$next")
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val line = s"""{"version":$next,"batches":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""" + "\n"
-    Files.write(dir.resolve("compact_manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.parquet(union, "part_bucket", "warc_day").parquet(s"$outDir/compact/v$next")
+    Commit.appendFold(compactManifest(outDir), "batches", Commit.Folds(next, st.folded ++ todo))
     next
   }
 

@@ -73,4 +73,13 @@ class IvfSpec extends AnyFunSuite {
     val b = Ivf.search(emb, Ivf.train(emb, 16, 2), col("vec_id") < 3, 3, 4).collect().toSeq
     assert(a == b)
   }
+
+  test("a centroid table over 65,536 rows fails fast instead of being collected") {
+    val big = spark.range(65537).select(col("id").cast("int").as("cluster"),
+      array(lit(0.0d)).as("cv"))
+    val e = intercept[IllegalArgumentException] {
+      Ivf.assign(emb.select(col("vec_id"), col("embedding").as("v")), big)
+    }
+    assert(e.getMessage.contains("65536"))
+  }
 }

@@ -351,7 +351,7 @@ class PipelineSpec extends AnyFunSuite {
     val out = tmpDir()
     // a long-lived job: 120 snapshots, 2 buckets each
     (0 until 120).foreach { i =>
-      ExtractPipeline.appendManifest(out, "long", f"snap-$i%03d",
+      Commit.appendSnapshot(out, "long", f"snap-$i%03d",
         Seq(i % 64, 64 + i % 64),
         Seq(LineageRow("long", f"snap-$i%03d", i, 10, 10, 0, 100, 5, "committed")))
     }
@@ -370,7 +370,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(java.nio.file.Files.readAllLines(arch).size == 120)
     // idempotent: nothing further to fold, resume still a no-op
     assert(ExtractPipeline.compactManifest(out) == 0)
-    ExtractPipeline.appendManifest(out, "more", "snap-more", Seq(200),
+    Commit.appendSnapshot(out, "more", "snap-more", Seq(200),
       Seq(LineageRow("more", "snap-more", 0, 1, 1, 0, 10, 1, "committed")))
     assert(ExtractPipeline.committedBuckets(out) == before + 200)
     assert(ExtractPipeline.compactManifest(out) == 2)
@@ -415,7 +415,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // a SECOND compaction archives the first compaction's marker line —
     // it must not surface as a phantom snapshot in the history
-    ExtractPipeline.appendManifest(out, "tt2", "snap-tt2-000", Seq(0),
+    Commit.appendSnapshot(out, "tt2", "snap-tt2-000", Seq(0),
       Seq(LineageRow("tt2", "snap-tt2-000", 0, 1, 1, 0, 1, 1, "committed")))
     assert(ExtractPipeline.compactManifest(out) == 2)
     val hist3 = ExtractPipeline.snapshotHistory(out)
